@@ -10,7 +10,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
 
-/** Measured shuffle audit over the bench headline set → `SHUFFLE.json`.
+/** Measured shuffle audit over the headline set → `SHUFFLE.json`.
   *
   * The plan-shape suites (PlanSpec / ShuffleBudgetSpec) pin the *structural*
   * claim — how many exchanges each headline plan is allowed. This main
@@ -36,9 +36,12 @@ import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
   * frame (a local relation — 0) is not the work's plan.
   *
   * Env: `SPARK_GRAFT_SF_DIR` (default sf0.01), `GRAFT_SHUFFLE_OUT`
-  * (default `SHUFFLE.json` in the CWD), `GRAFT_SHUFFLE_CORES` (default 8).
+  * (default `SHUFFLE.json` in the CWD). The sizes below are the recorded
+  * artifact's.
   */
 object ShuffleAuditMain {
+  private final val Cores = 8
+  private final val CrawlEntities = 50000L
 
   private final class Totals extends SparkListener {
     val shuffleWrite = new AtomicLong
@@ -70,11 +73,10 @@ object ShuffleAuditMain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val outPath = sys.env.getOrElse("GRAFT_SHUFFLE_OUT", "SHUFFLE.json")
-    val cpus = sys.env.getOrElse("GRAFT_SHUFFLE_CORES", "8").toInt
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(s"local[$Cores]")
       .appName("graft-shuffle-audit")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.shuffle.partitions", Cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -89,7 +91,7 @@ object ShuffleAuditMain {
       r
     }
 
-    val rows = Bench.headline.map { name =>
+    val rows = SparkEntry.headline.map { name =>
       val before = drained(totals.snapshot)
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
@@ -139,7 +141,7 @@ object ShuffleAuditMain {
     val crawlJson = {
       val work = Files.createTempDirectory("graft-shuffle-crawl").toString
       val cfg = graft.crawl.Crawl.CrawlConfig(seed = 42L,
-        nEntities = sys.env.getOrElse("GRAFT_SHUFFLE_CRAWL_ENTITIES", "50000").toLong,
+        nEntities = CrawlEntities,
         budgetPerHost = 1000000, saltBuckets = 4, maxTicks = 3, workDir = work)
       val before = drained(totals.snapshot)
       val t0 = System.nanoTime()
@@ -171,7 +173,7 @@ object ShuffleAuditMain {
     val json =
       s"""{
          |  "sf": "$sfDir",
-         |  "cores": $cpus,
+         |  "cores": $Cores,
          |  $crawlJson
          |  "method": "noop-sink write (full-column materialization); per-query task-metric deltas bracketed by deterministic listener-bus drains. scanned_file_bytes = on-disk size of the plan's scan locations (column pruning reads less); fs_bytes_read is the raw task-metric counter, which under-reports vectorized parquet on local file:// and fully reports cached-block reads — shuffle/spill counters are the accurate scale numbers",
          |  "queries": {

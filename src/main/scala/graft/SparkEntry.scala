@@ -21,6 +21,20 @@ object SparkEntry {
       graft.store.Cleanup.queries ++
       graft.queries.CrawlQueries.queries
 
+  /** The headline queries: the leaves whose plans carry the engine's
+    * operators (the crawl views are measured through the crawl itself).
+    * [[ShuffleAuditMain]] measures this set and ShuffleBudgetSpec pins an
+    * exchange budget for each of them. */
+  val headline: Seq[String] = Seq(
+    "q1_agg", "q_precedence_dedup", "q_keep_latest", "q_freq_agg",
+    "q_anti_join_exclusion", "q_backfill_join", "q_topk", "q_hourly_agg",
+    "q_dedup_exact", "q_dedup_prefix", "q_minhash_dedup", "q_simhash_dedup",
+    "q_winnow_dedup",
+    "q_embedding_neardup", "q_ann_brute", "q_ann_lsh", "q_token_count",
+    "q_ann_ivf", "q_lang_id", "q_quality_score", "q_fingerprint",
+    "q_html_strip", "q_curation", "q_media_decode", "q_frame_sample",
+    "q_merge_latest")
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check. */
   def oracleSql: Map[String, String] =

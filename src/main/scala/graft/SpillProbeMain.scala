@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   * real), ample-heap spill = 0 (the baseline was clean), fingerprints
   * equal (spilling changed nothing).
   *
-  * The kernel is sized so the tight fork MUST spill: `rows` rows of
+  * The kernel is sized so the tight fork MUST spill: [[Rows]] rows of
   * ~128-byte deterministic payload, shuffled on an 8192-key column into
-  * `cores` shuffle partitions, sorted within partitions (the external
+  * [[Cores]] shuffle partitions, sorted within partitions (the external
   * sorter under pressure), then aggregated per key with a sort_array'd
   * collect_list (sort_array makes the per-key fingerprint independent of
   * buffer merge order, so the fingerprint is deterministic WHETHER OR
@@ -36,12 +36,26 @@ import org.apache.spark.sql.functions._
   * global fingerprint collapses the 8192 per-key fingerprints the same
   * way.
   *
-  * Env: `GRAFT_SPILL_ROWS` (default 6M ≈ 0.9 GB of unsafe rows),
-  * `GRAFT_SPILL_CORES` (default 8), `GRAFT_SPILL_TIGHT_MB` (default
-  * 1024), `GRAFT_SPILL_AMPLE_MB` (default 12288), `GRAFT_SPILL_OUT`
+  * The sizes below are the recorded artifact's. Env: `GRAFT_SPILL_OUT`
   * (default `SPILL.json`).
   */
 object SpillProbeMain {
+  private final val Rows = 6000000L // ≈ 0.9 GB of unsafe rows
+  private final val Cores = 8
+  private final val TightMb = 1024
+  private final val AmpleMb = 12288
+
+  /** The JDK-17 module opens Spark needs when a session is created outside
+    * spark-submit (mirror of build.sbt / JavaModuleOptions). */
+  private val addOpens = Seq(
+    "java.base/java.lang", "java.base/java.lang.invoke",
+    "java.base/java.lang.reflect", "java.base/java.io",
+    "java.base/java.net", "java.base/java.nio",
+    "java.base/java.util", "java.base/java.util.concurrent",
+    "java.base/java.util.concurrent.atomic",
+    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+    "java.base/sun.security.action", "java.base/sun.util.calendar",
+  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
   private final class SpillTotals extends SparkListener {
     val disk = new AtomicLong
@@ -81,18 +95,18 @@ object SpillProbeMain {
   }
 
   /** Child mode: run the kernel once in THIS JVM, print one SPILLREP line. */
-  private def child(rows: Long, cores: Int): Unit = {
+  private def child(): Unit = {
     val spark = SparkSession.builder()
-      .master(s"local[$cores]")
+      .master(s"local[$Cores]")
       .appName("graft-spill-probe")
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.shuffle.partitions", Cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     val totals = new SpillTotals
     spark.sparkContext.addSparkListener(totals)
     val t0 = System.nanoTime()
-    val fp = kernel(spark, rows).collect()(0).getString(0)
+    val fp = kernel(spark, Rows).collect()(0).getString(0)
     val sec = (System.nanoTime() - t0) / 1e9
     org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(
       spark.sparkContext, 60000L)
@@ -105,14 +119,14 @@ object SpillProbeMain {
   private def num(pat: String, v: Double): String =
     String.format(Locale.ROOT, pat, Double.box(v))
 
-  private def fork(xmxMb: Int, rows: Long, cores: Int): Map[String, String] = {
+  private def fork(xmxMb: Int): Map[String, String] = {
     val java = System.getProperty("java.home") + "/bin/java"
-    val cmd: Seq[String] = Seq(java) ++ Bench.addOpens ++ Seq(
+    val cmd: Seq[String] = Seq(java) ++ addOpens ++ Seq(
       s"-Xmx${xmxMb}m", "-XX:+UseParallelGC",
-      s"-XX:ActiveProcessorCount=$cores",
+      s"-XX:ActiveProcessorCount=$Cores",
       "-Dspark.ui.enabled=false",
       "-cp", System.getProperty("java.class.path"),
-      "graft.SpillProbeMain", "child", rows.toString, cores.toString)
+      "graft.SpillProbeMain", "child")
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectError(ProcessBuilder.Redirect.INHERIT)
     val proc = pb.start()
@@ -124,21 +138,17 @@ object SpillProbeMain {
   }
 
   def main(args: Array[String]): Unit = {
-    val rows = sys.env.getOrElse("GRAFT_SPILL_ROWS", "6000000").toLong
-    val cores = sys.env.getOrElse("GRAFT_SPILL_CORES", "8").toInt
     if (args.headOption.contains("child")) {
-      child(args(1).toLong, args(2).toInt)
+      child()
       return
     }
-    val tightMb = sys.env.getOrElse("GRAFT_SPILL_TIGHT_MB", "1024").toInt
-    val ampleMb = sys.env.getOrElse("GRAFT_SPILL_AMPLE_MB", "12288").toInt
     val outPath = sys.env.getOrElse("GRAFT_SPILL_OUT", "SPILL.json")
 
-    System.err.println(s"[spill] ample fork: ${ampleMb}m, $rows rows, $cores cores")
-    val ample = fork(ampleMb, rows, cores)
+    System.err.println(s"[spill] ample fork: ${AmpleMb}m, $Rows rows, $Cores cores")
+    val ample = fork(AmpleMb)
     System.err.println(s"[spill] ample: $ample")
-    System.err.println(s"[spill] tight fork: ${tightMb}m")
-    val tight = fork(tightMb, rows, cores)
+    System.err.println(s"[spill] tight fork: ${TightMb}m")
+    val tight = fork(TightMb)
     System.err.println(s"[spill] tight: $tight")
 
     val fpEqual = ample("fp") == tight("fp")
@@ -150,11 +160,11 @@ object SpillProbeMain {
         s""""shuffle_write_bytes":${m("shuffle_write")},"fp":"${m("fp")}"}"""
     val json =
       s"""{
-         |  "rows": $rows,
-         |  "cores": $cores,
+         |  "rows": $Rows,
+         |  "cores": $Cores,
          |  "method": "same deterministic shuffle+sort+aggregate kernel (8192-key repartition, in-partition sort, sort_array'd collect_list per key -> one global md5) in two forked JVMs; task-metric spill totals drained via GraftListenerBridge. pass = tight spills, ample does not, fingerprints byte-equal",
-         |  "ample": {"xmx_mb": $ampleMb, "run": ${run(ample)}},
-         |  "tight": {"xmx_mb": $tightMb, "run": ${run(tight)}},
+         |  "ample": {"xmx_mb": $AmpleMb, "run": ${run(ample)}},
+         |  "tight": {"xmx_mb": $TightMb, "run": ${run(tight)}},
          |  "fp_equal": $fpEqual,
          |  "tight_spilled": $tightSpilled,
          |  "ample_clean": $ampleClean,

@@ -310,16 +310,6 @@ object Crawl {
     * and persist pages + seen + Bloom + manifest. The micro-batch core
     * shared by the batch loop ([[tick]]) and the streaming frontier
     * (graft.streaming.StreamingCrawl). */
-  private val phaseTiming = sys.env.contains("GRAFT_PHASE_TIMING")
-  private def phase[T](label: String)(f: => T): T =
-    if (!phaseTiming) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[phase] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   def scheduleAndPersist(spark: SparkSession, cfg: CrawlConfig, tickIdx: Int,
                          fresh: Dataset[CrawlUnit]): TickResult = {
     import spark.implicits._
@@ -367,7 +357,7 @@ object Crawl {
     val perPartitionInterval =
       if (cfg.maxRps > 0) (fetchPartitions.toDouble / cfg.maxRps * 1e9).toLong
       else 0L
-    phase(s"tick=$tickIdx fetch+parse+write") { batch
+    batch
       .repartition(fetchPartitions, $"url")
       .as[FetchUnit]
       .mapPartitions { it =>
@@ -407,7 +397,6 @@ object Crawl {
       // benefit from dictionary filtering (they read, not filter).
       .option("parquet.enable.dictionary", "false")
       .parquet(s"${cfg.workDir}/pages/tick=$tickIdx")
-    }
     val m = obs.get
     val scheduledCount = m("n").asInstanceOf[Long]
     if (scheduledCount == 0) {
@@ -431,28 +420,28 @@ object Crawl {
     import scala.concurrent.ExecutionContext.Implicits.global
 
     // seen append (url + xxhash64 key for bucketing/Bloom)
-    val seenF = Future { phase(s"tick=$tickIdx seen-write") {
+    val seenF = Future {
       pages.select($"url", xxhash64($"url").as("urlHash"))
         .write.mode(SaveMode.Overwrite)
         .option("maxRecordsPerFile", 500000) // W5 bounded write batches
         .option("parquet.enable.dictionary", "false") // unique urls
         .parquet(s"${seenDir(cfg.workDir)}/tick=$tickIdx")
-    } }
+    }
 
     // persist this tick's Bloom sketch (mergeable across ticks and runs)
-    val bloomF = Future { phase(s"tick=$tickIdx bloom") {
+    val bloomF = Future {
       graft.dedup.BloomSeen.save(
         graft.dedup.BloomSeen.build(pages.select($"url").as[String],
           cfg.effectiveBloomCapacity, cfg.bloomFpp),
         cfg.workDir, tickIdx)
-    } }
+    }
 
     // manifest: per-(host,salt)-partition lineage watermarks + counters (M7)
-    val watermarksF = Future { phase(s"tick=$tickIdx watermarks") {
+    val watermarksF = Future {
       pages.groupBy($"host", $"salt")
         .agg(max($"sortKey").as("wm"))
         .collect()
-    } }
+    }
 
     val watermarks = Await.result(watermarksF, Duration.Inf)
       .map(r => s""""${r.getString(0)}#${r.getInt(1)}": "${r.getString(2)}"""")
@@ -560,7 +549,7 @@ object Crawl {
     // resume path (rare): the exhaustion check is needed BEFORE the next
     // tick runs, so it pays the explicit count
     var total = if (start == 0) -1L
-                else phase("candidates+count(resume)")(candidates.count())
+                else candidates.count()
     var crawled =
       if (start == 0) 0L
       else readSeen(spark, cfg.workDir).count()

@@ -18,18 +18,6 @@ final case class Span(kind: String, text: String, media_ref: String, offset: Int
 /** An interleaved text+media document keyed by doc_id = "qid:lang". */
 final case class Doc(doc_id: String, spans: Seq[Span])
 
-/** One frontier entry — the crawl work unit before language fan-out.
-  * Mirrors the per-family frontier rows (wikipedia_crawler.py:86-541):
-  * (id, ID_WIKIDATA) plus scheduling metadata the Spark engine makes explicit. */
-final case class FrontierEntry(
-    url: String,
-    host: String,
-    family: String,
-    familyRank: Int, // precedence order of the 20 families (wikipedia_crawler.py:600-761)
-    pk: String,      // per-family ordered key, drives ORDER BY pk ASC resume
-    priority: Int,
-    idWikidata: String)
-
 /** Result of one synthetic fetch+parse of a crawl unit (entity × lang).
   * Mirrors the payload dict of wikipedia_page_writer.py:80-90. */
 final case class FetchResult(
@@ -42,17 +30,3 @@ final case class FetchResult(
     pageTitle: String,
     mainImageUrl: String,
     spans: Seq[Span])
-
-/** Checkpoint manifest — the engine's analogue of the reference's
-  * T_WC_SERVER_VARIABLE KV checkpoints (wikipedia_crawler.py:859-888) plus
-  * an Iceberg-style snapshot listing (no Iceberg jars in-sandbox; this thin
-  * manifest reproduces snapshot/metadata minimally — see SURVEY.md §7.0). */
-final case class Manifest(
-    snapshotId: Long,
-    family: String,
-    batchIndex: Int,
-    // per-partition lineage: partitionId -> last pk watermark processed
-    watermarks: Map[Int, String],
-    counters: Map[String, Long],
-    seenFiles: Seq[String],
-    docFiles: Seq[String])

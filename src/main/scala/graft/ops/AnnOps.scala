@@ -64,7 +64,7 @@ object AnnOps {
 
   /** Memoized table counts for adaptive sizing: each adaptive operator
     * needs ONE row count to size its hash/index, and a long-lived session
-    * (Bench: warmup + timed run per query) must not pay a full count scan
+    * (which runs many queries) must not pay a full count scan
     * per invocation — at 100 TB that scan is the most expensive no-op in
     * the job. Keyed by caller-chosen string (dir + derivation). */
   private val counts = scala.collection.concurrent.TrieMap.empty[String, Long]

@@ -54,7 +54,7 @@ object DedupOps {
     * rebuild as a local relation, so the big upstream persist (signature
     * tables) can be released immediately — returning the persisted frame
     * itself leaked one cached DataFrame per invocation for the session
-    * lifetime (Bench runs warmup + timed in one JVM). Only for verified
+    * lifetime (a long-lived session runs many queries). Only for verified
     * near-dup PAIR SETS, whose size is bounded by true near-dup density,
     * not input size; a production run sinks pairs to storage instead of
     * returning a frame at all.
@@ -86,8 +86,8 @@ object DedupOps {
     *
     * The returned frame is eagerly materialized (it is the small verified
     * pair set) so the LARGE per-doc signature cache can be released before
-    * returning — a long-lived session (Bench runs the full headline set in
-    * one JVM) must not accumulate one shingle-table copy per invocation. */
+    * returning — a long-lived session, which runs many queries, must not
+    * accumulate one shingle-table copy per invocation. */
   def minhashPairs(spark: SparkSession, dir: String,
                    b: Int = 16, r: Int = 4,
                    threshold: Double = 0.8): DataFrame = {

@@ -32,15 +32,19 @@ object CrawlQueries {
   /** Scratch dir for query-scaffolding state (merge stores, shared-crawl
     * work dirs): tmpfs when available — the disk-backed /tmp write+commit
     * round-trips were the dominant cost of the first timed q_merge_* call
-    * (measured 2.5 s vs 0.7 s build, 0.78 vs 0.29 s read-back). Same
-    * placement rule as CrawlRepMain.benchTmp; falls back to
-    * java.io.tmpdir when /dev/shm is absent. */
+    * (measured 2.5 s vs 0.7 s build, 0.78 vs 0.29 s read-back); falls
+    * back to java.io.tmpdir when /dev/shm is absent. The memoized stores
+    * and crawls below serve every later query of the JVM, so each dir is
+    * deleted at JVM shutdown (tmpfs is memory). */
   private[graft] def scratchTmp(prefix: String): String = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val base =
       if (Files.isWritable(shm)) shm
       else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    Files.createTempDirectory(base, prefix).toString
+    val dir = Files.createTempDirectory(base, prefix).toFile
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(dir): Unit))
+    dir.toString
   }
 
   /** One full mini-crawl shared by the view queries below (memoized per
@@ -276,7 +280,10 @@ object CrawlQueries {
     scala.collection.concurrent.TrieMap.empty[String, String]
   private def mergeStoreDir(spark: SparkSession, dir: String): String = synchronized {
     mergeStores.getOrElseUpdate(dir, {
-      val store = scratchTmp("graft-merge-q")
+      // a subdirectory: the `<store>.bucketed` snapshot sibling that
+      // MergeStore.snapshotBucketed writes then lands inside the scratch
+      // dir and is deleted with it
+      val store = scratchTmp("graft-merge-q") + "/store"
       // r6: ONE partitioned write builds all three generations — the
       // per-generation ingest loop ran three sequential write jobs (three
       // scans of documents, three commit rounds) and the store build is

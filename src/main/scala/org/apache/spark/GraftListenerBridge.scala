@@ -3,10 +3,10 @@ package org.apache.spark
 /** Deterministic drain of the async listener bus.
   *
   * `SparkContext.listenerBus` and `LiveListenerBus.waitUntilEmpty` are
-  * `private[spark]`; measurement mains (CrawlRepMain's per-stage task-time
-  * stats) need to block until every queued task-end event has been
-  * delivered before reading listener state — a fixed sleep is a race that
-  * silently undercounts stage totals under load. Same package-scoped
+  * `private[spark]`; measurement mains (ShuffleAuditMain's per-query
+  * shuffle deltas, SpillProbeMain's spill totals) need to block until every
+  * queued task-end event has been delivered before reading listener state
+  * — a fixed sleep is a race that silently undercounts totals under load. Same package-scoped
   * bridge pattern as [[org.apache.spark.sql.graftbridge.ColumnBridge]].
   */
 object GraftListenerBridge {

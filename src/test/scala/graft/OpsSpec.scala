@@ -222,7 +222,7 @@ class OpsSpec extends AnyFunSuite {
   test("pair operators release their signature caches (no persist leak)") {
     // the verified pair set detaches from its cached lineage, so each
     // invocation must leave the session's persistent-RDD set unchanged —
-    // Bench runs warmup + timed sets in one JVM and a leak per invocation
+    // a long-lived session runs many queries, and a leak per invocation
     // accumulates for the session lifetime
     val before = spark.sparkContext.getPersistentRDDs.keySet
     DedupOps.minhashPairs(spark, sf0001).count()

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.SimpleMode
 
-/** Shuffle-exchange budget for every bench headline query.
+/** Shuffle-exchange budget for every headline query.
   *
   * PlanSpec pins *which* structural features individual plans must keep
   * (pushed filters, broadcast sides, TakeOrderedAndProject...); this spec
@@ -63,9 +63,9 @@ class ShuffleBudgetSpec extends AnyFunSuite {
           l.contains("Exchange SinglePartition"))
 
   test("the budget covers the whole bench headline set") {
-    assert(Bench.headline.toSet == budget.keySet,
-      s"headline/budget drift: ${Bench.headline.toSet.diff(budget.keySet)} " +
-        s"unbudgeted, ${budget.keySet.diff(Bench.headline.toSet)} stale")
+    assert(SparkEntry.headline.toSet == budget.keySet,
+      s"headline/budget drift: ${SparkEntry.headline.toSet.diff(budget.keySet)} " +
+        s"unbudgeted, ${budget.keySet.diff(SparkEntry.headline.toSet)} stale")
   }
 
   for ((name, max) <- budget.toSeq.sortBy(_._1)) {
