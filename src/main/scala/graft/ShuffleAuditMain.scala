@@ -30,7 +30,7 @@ import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
   * `count()` (the bench's latency convention) lets Spark prune columns,
   * which is right for timing but would under-report scan and shuffle
   * bytes here. Dedup/ANN operators that eagerly compute inside the
-  * builder (detached results — see `DedupOps.detachSmall`) are still
+  * builder (detached pair sets — see `DedupOps.run`) are still
   * measured correctly: the bracket spans the builder call, and their
   * `plan_detached` flag records that the exchange count of the *returned*
   * frame (a local relation — 0) is not the work's plan.
@@ -155,11 +155,7 @@ object ShuffleAuditMain {
       val stateBytes = dirBytes(new java.io.File(work))
       val urls = ticks.map(_.scheduled).sum
       // tmpfs is memory on this host — drop the state as soon as measured
-      def rmTree(p: java.io.File): Unit = {
-        if (p.isDirectory) p.listFiles().foreach(rmTree)
-        p.delete(): Unit
-      }
-      rmTree(new java.io.File(work))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
       System.err.println(f"[shuffle] crawl ${urls} urls: shuffle write=${sw / 1e6}%.1fMB " +
         f"read=${sr / 1e6}%.1fMB spill=${sp / 1e6}%.1fMB pages=${pageBytes / 1e6}%.1fMB " +
         f"state=${stateBytes / 1e6}%.1fMB ratio=${sw.toDouble / pageBytes}%.3f ${sec}%.1fs")

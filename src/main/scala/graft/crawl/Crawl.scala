@@ -1,5 +1,6 @@
 package graft.crawl
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -94,13 +95,7 @@ object Crawl {
   /** All schedulable units after validity, canonical/precedence/sitelink
     * dedup and robots gating. Pure function of (seed, nEntities) — never
     * materialized on the driver. */
-  def candidateUnits(spark: SparkSession, cfg: CrawlConfig): Dataset[CrawlUnit] =
-    candidateUnits(spark, cfg, 0L, cfg.nEntities)
-
-  /** Range-restricted variant — the streaming frontier announces entity
-    * ranges per micro-batch; the same pruning a resume pk-predicate does. */
-  def candidateUnits(spark: SparkSession, cfg: CrawlConfig,
-                     from: Long, until: Long): Dataset[CrawlUnit] = {
+  def candidateUnits(spark: SparkSession, cfg: CrawlConfig): Dataset[CrawlUnit] = {
     import spark.implicits._
 
     // S1 frontier scan (synthetic source), P1 Qid-validity filter pushed
@@ -111,9 +106,9 @@ object Crawl {
     // 3x-parallelism ranges: entity generation is allocation-heavy, and a
     // single 1-task-per-core wave leaves the stage bound by its slowest
     // task; finer tasks smooth the wave (same reasoning as the fetch
-    // stage's explicit 3x repartition)
+    // stage's explicit 6x repartition)
     val genParts = spark.sparkContext.defaultParallelism * 3
-    val frontier = spark.range(from, until, 1, genParts)
+    val frontier = spark.range(0L, cfg.nEntities, 1, genParts)
       .flatMap(i => World.frontierRows(cfg.seed, i))
       .filter($"qid".rlike("^Q[0-9]+$"))
 
@@ -144,7 +139,7 @@ object Crawl {
     // selected row is the old window's rn=1. SortAggregate sorts by the
     // two group keys instead of (qid, lang, title) and reports its output
     // ordering, so the downstream qid merge join still needs no sort.
-    val sitelinks = spark.range(from, until, 1, genParts)
+    val sitelinks = spark.range(0L, cfg.nEntities, 1, genParts)
       .flatMap(i => World.sitelinkRows(cfg.seed, i))
       .repartition($"qid")
       .groupBy($"qid", $"lang")
@@ -480,16 +475,12 @@ object Crawl {
     * (the keyed-write idempotence argument, README.md:506-516). */
   def cleanPartialTicks(workDir: String): Unit = {
     val committed = completedTicks(workDir)
-    def rmRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmRec)
-      f.delete()
-    }
     def sweep(dir: java.io.File, suffix: String): Unit =
       if (dir.exists) dir.listFiles().foreach { f =>
         val n = f.getName
         if (n.startsWith("tick=") && n.endsWith(suffix)) {
           val t = n.stripPrefix("tick=").stripSuffix(suffix)
-          if (t.matches("\\d+") && t.toInt >= committed) rmRec(f)
+          if (t.matches("\\d+") && t.toInt >= committed) FileUtils.deleteQuietly(f)
         }
       }
     sweep(new java.io.File(s"$workDir/pages"), "")
@@ -514,7 +505,7 @@ object Crawl {
     import spark.implicits._
     // AQE off for the crawl job (restored after): every partition count in
     // this pipeline is pinned explicitly (windows at shuffle.partitions,
-    // fetch at 3x parallelism), so adaptive re-planning has nothing to
+    // fetch at 6x parallelism), so adaptive re-planning has nothing to
     // decide — but its per-exchange query-stage barriers serialize an
     // otherwise pipelined job (measured: 49.6->38.5 s at 8 cores AND
     // 149.8->113.7 s at 2 cores on the 491k-URL world, same machine
@@ -600,11 +591,7 @@ object Crawl {
     import spark.implicits._
     val path = new java.io.File(s"$workDir/docs_bucketed")
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    def rm(f: java.io.File): Unit = if (f.exists) {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(path)
+    FileUtils.deleteQuietly(path)
     docsView(spark, workDir)
       .write.format("parquet")
       .option("path", path.getPath)

@@ -36,13 +36,11 @@ object AnnOps {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** [[cosine]] with the per-vector norms HOISTED to row level: the HOF
-    * norm is O(d) and `cosine` recomputes BOTH norms per scored PAIR —
-    * hoisting them into the (much smaller) per-row frames is
-    * bit-identical (same fold, same multiply order: norm(a)·norm(b)) and
-    * cuts the per-pair kernel to one dot product. */
+  /** Cosine with the per-vector norms HOISTED to row level: computing
+    * dot(a,b)/(norm(a)·norm(b)) per scored PAIR would recompute both O(d)
+    * norms per pair; hoisting them into the (much smaller) per-row frames
+    * is bit-identical (same fold, same multiply order) and cuts the
+    * per-pair kernel to one dot product. */
   def cosineHoisted(a: Column, b: Column, an: Column, bn: Column): Column =
     dot(a, b) / (an * bn)
 
@@ -56,10 +54,10 @@ object AnnOps {
     * 48. A FIXED width is a scale bug — candidate pairs grow O(n²/2^bits),
     * quadratic again at 10^10 rows; adaptive width keeps the per-bucket
     * join quadratic only in a constant (256² per bucket). */
-  def adaptiveNBits(n: Long, target: Long = targetBucketSize, floor: Int = 6): Int = {
-    val buckets = math.max(1L, n / target)
+  def adaptiveNBits(n: Long): Int = {
+    val buckets = math.max(1L, n / targetBucketSize)
     val bits = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, buckets - 1))
-    math.min(48, math.max(floor, bits))
+    math.min(48, math.max(6, bits))
   }
 
   /** Memoized table counts for adaptive sizing: each adaptive operator
@@ -91,41 +89,49 @@ object AnnOps {
       (0 until bits).combinations(r)
         .map(is => is.foldLeft(center)((b, i) => b ^ (1L << i))).toSeq)
 
-  /** q_ann_brute — exact cosine top-k per query vector. Query set = the
-    * first `nQueries` vec_ids (broadcast); base = the full table. */
-  def bruteTopK(spark: SparkSession, dir: String,
-                nQueries: Int = 8, k: Int = 10): DataFrame = {
-    val emb = t(spark, dir, "embeddings").select($"vec_id", $"embedding")
-      .withColumn("bn", norm($"embedding"))
-    val queries = emb.filter($"vec_id" < nQueries)
-      .select($"vec_id".as("query_id"), $"embedding".as("qv"), $"bn".as("qn"))
-    val scored = emb.join(broadcast(queries), $"vec_id" =!= $"query_id")
-      .withColumn("cos",
-        round(cosineHoisted($"qv", $"embedding", $"qn", $"bn"), 6))
+  // Fixed query shape of the three top-k searches, shared with their
+  // DuckDB twins: queries are vec_ids below NQueries, TopK hits each.
+  private val NQueries = 8
+  private val TopK = 10
+  private val NProbe = 4 // IVF lists probed per query
+
+  /** The shared top-k tail: exact rounded cosine of each (query_id, qv,
+    * qn) × (vec_id, embedding, bn) candidate pair, then the first TopK per
+    * query by (cos desc, vec_id asc). */
+  private def topKByCosine(pairs: DataFrame): DataFrame = {
     val w = Window.partitionBy($"query_id")
       .orderBy($"cos".desc, $"vec_id".asc)
-    scored
+    pairs
+      .withColumn("cos",
+        round(cosineHoisted($"qv", $"embedding", $"qn", $"bn"), 6))
       .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
+      .filter($"rank" <= TopK)
       .select($"query_id", $"rank", $"vec_id", $"cos")
   }
 
-  /** q_ann_lsh — the scale path: bucket base vectors by sign-LSH, probe
-    * only the query's bucket (plus Hamming-1 neighbor buckets), exact
-    * cosine within. Recall measured against bruteTopK in tests.
-    * nBits ≤ 0 (default) = adaptive width from the table count, see
-    * [[adaptiveNBits]]. */
-  def lshTopK(spark: SparkSession, dir: String, nQueries: Int = 8,
-              k: Int = 10, nBits: Int = 0): DataFrame = {
+  /** q_ann_brute — exact cosine top-k per query vector. Query set = the
+    * first [[NQueries]] vec_ids (broadcast); base = the full table. */
+  def bruteTopK(spark: SparkSession, dir: String): DataFrame = {
+    val emb = t(spark, dir, "embeddings").select($"vec_id", $"embedding")
+      .withColumn("bn", norm($"embedding"))
+    val queries = emb.filter($"vec_id" < NQueries)
+      .select($"vec_id".as("query_id"), $"embedding".as("qv"), $"bn".as("qn"))
+    topKByCosine(emb.join(broadcast(queries), $"vec_id" =!= $"query_id"))
+  }
+
+  /** q_ann_lsh — the scale path: bucket base vectors by sign-LSH at the
+    * [[adaptiveNBits]] width, probe only the query's bucket (plus Hamming-1
+    * neighbor buckets), exact cosine within. Recall measured against
+    * bruteTopK in tests. */
+  def lshTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val base = t(spark, dir, "embeddings").select($"vec_id", $"embedding")
-    val bits = if (nBits > 0) nBits
-               else adaptiveNBits(cachedCount(s"emb:$dir")(base.count()))
+    val bits = adaptiveNBits(cachedCount(s"emb:$dir")(base.count()))
     val emb = base.as[(Long, Seq[Float])]
-      .map { case (id, v) => (id, v, Sigs.signBucket(v, bits)) }
+      .map { case (id, v) => (id, v, Sigs.signBucket(v.map(_.toDouble), bits)) }
       .toDF("vec_id", "embedding", "bucket")
       .withColumn("bn", norm($"embedding"))
-    val queries = emb.filter($"vec_id" < nQueries)
+    val queries = emb.filter($"vec_id" < NQueries)
       .select($"vec_id", $"embedding", $"bucket")
       .as[(Long, Seq[Float], Long)]
       // multi-probe: own bucket + all Hamming-1 neighbor buckets
@@ -133,16 +139,8 @@ object AnnOps {
         hammingBall(bkt, bits, 1).map(p => (id, v, p)) }
       .toDF("query_id", "qv", "bucket")
       .withColumn("qn", norm($"qv"))
-    val scored = emb.join(broadcast(queries), Seq("bucket"))
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("cos",
-        round(cosineHoisted($"qv", $"embedding", $"qn", $"bn"), 6))
-    val w = Window.partitionBy($"query_id")
-      .orderBy($"cos".desc, $"vec_id".asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"rank", $"vec_id", $"cos")
+    topKByCosine(emb.join(broadcast(queries), Seq("bucket"))
+      .filter($"vec_id" =!= $"query_id"))
   }
 
   // ---- IVF (inverted-file) ANN — the trained-bucketer scale path ---------
@@ -178,7 +176,7 @@ object AnnOps {
     val base = t(spark, dir, "embeddings").select($"vec_id", $"embedding")
     val bits = adaptiveNBits(cachedCount(s"emb:$dir")(base.count()))
     base.as[(Long, Seq[Float])]
-      .map { case (id, v) => (id, Sigs.signBucket(v, bits), bits) }
+      .map { case (id, v) => (id, Sigs.signBucket(v.map(_.toDouble), bits), bits) }
       .toDF("vec_id", "bucket", "bits")
   }
 
@@ -194,22 +192,20 @@ object AnnOps {
     * (lowest minstd-LCG key — reproducible in plain SQL, no RNG), each
     * base vector assigned to its nearest list by ONE broadcast-kernel
     * pass (no shuffle, no crossJoin explosion: O(K·d) CPU per row),
-    * queries probe their nProbe nearest lists, exact cosine inside.
+    * queries probe their [[NProbe]] nearest lists, exact cosine inside.
     * The IVF upgrade path of SCALE.md §6: swap the sampled centroids for
-    * trained ones and nothing else changes. nLists ≤ 0 = adaptive:
+    * trained ones and nothing else changes. List count
     * K = clamp(ceil(√n), 16, 65536) — the standard IVF sizing. √n (not
     * n/256, which round 2 used) keeps BOTH sides of the index balanced:
     * the centroid table stays a genuine broadcast dimension (10^10 vectors
     * → 10^5 centroids ≈ tens of MB collected, not 39M rows) and per-row
     * assignment work stays O(√n·d); average list length is also √n, which
-    * nProbe-bounded probing handles. IEEE sqrt is correctly rounded, so
+    * NProbe-bounded probing handles. IEEE sqrt is correctly rounded, so
     * the DuckDB oracle's ceil(sqrt(count)) picks the identical K. */
-  def ivfTopK(spark: SparkSession, dir: String, nQueries: Int = 8,
-              k: Int = 10, nProbe: Int = 4, nLists: Int = 0): DataFrame = {
+  def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val base = t(spark, dir, "embeddings").select($"vec_id", $"embedding")
-    val n = cachedCount(s"emb:$dir")(base.count())
-    val lists = if (nLists > 0) nLists else adaptiveNLists(n)
+    val lists = adaptiveNLists(cachedCount(s"emb:$dir")(base.count()))
     // centroid sample: lowest K by (vec_id * 48271) % 2147483647 — a pure
     // arithmetic key DuckDB computes identically (data-dependent sample,
     // driver-collected: K rows, a broadcast dimension)
@@ -227,36 +223,29 @@ object AnnOps {
       }.toDF("vec_id", "embedding", "list_id")
       .withColumn("bn", norm($"embedding"))
 
-    val probes = base.filter($"vec_id" < nQueries).as[(Long, Seq[Float])]
+    val probes = base.filter($"vec_id" < NQueries).as[(Long, Seq[Float])]
       .mapPartitions { it =>
         val cs = bc.value
         it.flatMap { case (id, v) =>
-          nearestLists(cs, v, nProbe).map { case (cid, _) => (id, v, cid) } }
+          nearestLists(cs, v, NProbe).map { case (cid, _) => (id, v, cid) } }
       }.toDF("query_id", "qv", "list_id")
       .withColumn("qn", norm($"qv"))
 
-    val w = Window.partitionBy($"query_id")
-      .orderBy($"cos".desc, $"vec_id".asc)
-    assigned.join(broadcast(probes), Seq("list_id"))
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("cos",
-        round(cosineHoisted($"qv", $"embedding", $"qn", $"bn"), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"rank", $"vec_id", $"cos")
+    topKByCosine(assigned.join(broadcast(probes), Seq("list_id"))
+      .filter($"vec_id" =!= $"query_id"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ann_brute" -> ((s: SparkSession, d: String) => bruteTopK(s, d)),
-    "q_ann_lsh" -> ((s: SparkSession, d: String) => lshTopK(s, d)),
-    "q_ann_ivf" -> ((s: SparkSession, d: String) => ivfTopK(s, d)))
+    "q_ann_brute" -> (bruteTopK _),
+    "q_ann_lsh" -> (lshTopK _),
+    "q_ann_ivf" -> (ivfTopK _))
 
   val oracle: Map[String, String] = Map(
     // full IVF twin: same deterministic centroid sample (arithmetic LCG
     // key), same rounded-cosine assignment with cid tie-break, same
-    // nProbe probing — a HARD equality check on an ANN index structure
+    // NProbe probing — a HARD equality check on an ANN index structure
     "q_ann_ivf" ->
-      """WITH cents AS (
+      s"""WITH cents AS (
         |  SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
         |  ORDER BY (vec_id * 48271) % 2147483647, vec_id
         |  LIMIT least(65536, greatest(16, CAST(ceil(sqrt(CAST(
@@ -275,8 +264,8 @@ object AnnOps {
         |      row_number() OVER (PARTITION BY e.vec_id
         |        ORDER BY round(list_cosine_similarity(c.cv,
         |          CAST(e.embedding AS DOUBLE[])), 6) DESC, c.cid ASC) AS rn
-        |    FROM embeddings e CROSS JOIN cents c WHERE e.vec_id < 8)
-        |  WHERE rn <= 4
+        |    FROM embeddings e CROSS JOIN cents c WHERE e.vec_id < $NQueries)
+        |  WHERE rn <= $NProbe
         |), scored AS (
         |  SELECT p.query_id, a.vec_id,
         |    round(list_cosine_similarity(CAST(p.qv AS DOUBLE[]),
@@ -287,13 +276,13 @@ object AnnOps {
         |  SELECT query_id, vec_id, cos,
         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC)
         |      AS rank
-        |  FROM scored) WHERE rank <= 10""".stripMargin,
+        |  FROM scored) WHERE rank <= $TopK""".stripMargin,
     // LSH twin over the exported bucket table: DuckDB independently
     // regenerates the Hamming-1 probe ring, the bucket equi-join, the
     // exact cosine, and the ranking — everything downstream of the bucket
     // kernel (which OpsSpec ground-truths against brute force)
     "q_ann_lsh" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT vec_id, bucket, bits
         |  FROM read_parquet('__EXPORT__/export_lsh_buckets/*.parquet')
         |), e AS (
@@ -303,7 +292,7 @@ object AnnOps {
         |  FROM b q, unnest(list_prepend(q.bucket,
         |    list_transform(generate_series(0, q.bits - 1),
         |      i -> xor(q.bucket, 1::BIGINT << i)))) AS p(probe)
-        |  WHERE q.vec_id < 8
+        |  WHERE q.vec_id < $NQueries
         |), scored AS (
         |  SELECT p.query_id, c.vec_id,
         |    round(list_cosine_similarity(qe.v, ce.v), 6) AS cos
@@ -316,10 +305,10 @@ object AnnOps {
         |  SELECT query_id, vec_id, cos,
         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC)
         |      AS rank
-        |  FROM scored) WHERE rank <= 10""".stripMargin,
+        |  FROM scored) WHERE rank <= $TopK""".stripMargin,
     "q_ann_brute" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8
+      s"""WITH q AS (
+        |  SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < $NQueries
         |), scored AS (
         |  SELECT q.query_id, e.vec_id,
         |    round(list_cosine_similarity(CAST(q.qv AS DOUBLE[]),
@@ -330,5 +319,5 @@ object AnnOps {
         |  SELECT query_id, vec_id, cos,
         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC)
         |      AS rank
-        |  FROM scored) WHERE rank <= 10""".stripMargin)
+        |  FROM scored) WHERE rank <= $TopK""".stripMargin)
 }

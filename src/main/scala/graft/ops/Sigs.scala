@@ -24,19 +24,10 @@ object Sigs {
       .distinct.toArray
   }
 
-  /** MinHash signature: k permutations h_i(s) = mix(hash(s), i). */
-  def minhash(text: String, k: Int): Array[Long] =
-    minhashOfShingles(shingles(text), k)
-
-  /** MinHash over an already-computed shingle set — lets callers compute
-    * shingles ONCE per doc and reuse them for both banding and the exact
-    * Jaccard verify (was: 3 shingle passes per doc per query). */
-  def minhashOfShingles(sh: Array[String], k: Int): Array[Long] =
-    minhashOfHashes(sh.map(hashStr), k)
-
-  /** MinHash over pre-hashed shingles ([[shingleHashes]]) — identical
-    * values to [[minhashOfShingles]] (it IS that function's inner loop:
-    * same hashStr stream, same mix fold). */
+  /** MinHash signature over pre-hashed shingles ([[shingleHashes]]): k
+    * permutations h_i(s) = mix(hash(s), i). Taking the hashes lets callers
+    * shingle ONCE per doc and reuse the set for both banding and the exact
+    * Jaccard verify. */
   def minhashOfHashes(hs: Array[Long], k: Int): Array[Long] =
     Array.tabulate(k) { i =>
       var m = Long.MaxValue
@@ -147,28 +138,11 @@ object Sigs {
     picks.toArray
   }
 
-  /** Sign-LSH bucket over a float vector: nBits hyperplanes with
-    * deterministic ±1 components from mix(i, d). */
-  def signBucket(v: Seq[Float], nBits: Int): Long = {
-    var bucket = 0L
-    var i = 0
-    while (i < nBits) {
-      var proj = 0.0
-      var d = 0
-      while (d < v.length) {
-        val sign = if ((mix(i.toLong, d.toLong) & 1L) == 1L) 1.0 else -1.0
-        proj += v(d) * sign
-        d += 1
-      }
-      if (proj > 0) bucket |= (1L << i)
-      i += 1
-    }
-    bucket
-  }
-
-  /** [[signBucket]] over a double vector — identical hyperplanes, so a
-    * float vector and its exact double image land in the same bucket. */
-  def signBucketD(v: Seq[Double], nBits: Int): Long = {
+  /** Sign-LSH bucket: nBits hyperplanes with deterministic ±1 components
+    * from mix(i, d). Float vectors pass their exact double image; each
+    * product is formed in double either way, so a float vector and its
+    * double image land in the same bucket. */
+  def signBucket(v: Seq[Double], nBits: Int): Long = {
     var bucket = 0L
     var i = 0
     while (i < nBits) {

@@ -1,5 +1,6 @@
 package graft.store
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -121,8 +122,8 @@ object MergeStore {
     val target = new java.io.File(dir)
     val staging = new java.io.File(s"$dir.compact")
     val old = new java.io.File(s"$dir.old")
-    rm(staging)
-    rm(old)
+    FileUtils.deleteQuietly(staging)
+    FileUtils.deleteQuietly(old)
     val merged = mergedView(spark, dir, keys, creationCols, stickyCols)
     merged.withColumn("gen", lit(0)).write.mode(SaveMode.Overwrite)
       .partitionBy("gen").parquet(staging.getPath)
@@ -137,7 +138,7 @@ object MergeStore {
     // delete the old copy only once the new base actually reads
     require(spark.read.parquet(dir).columns.nonEmpty,
       s"compact: new base at $dir unreadable; old copy kept at $old")
-    rm(old)
+    FileUtils.deleteQuietly(old)
   }
 
   /** Bucketed snapshot of the merged view — the READ-optimized compaction.
@@ -168,7 +169,7 @@ object MergeStore {
                        stickyCols: Seq[String] = Nil): DataFrame = {
     val path = new java.io.File(s"$dir.bucketed")
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    rm(path) // external-table path: DROP leaves the files behind
+    FileUtils.deleteQuietly(path) // external-table path: DROP leaves the files behind
     mergedView(spark, dir, keys, creationCols, stickyCols)
       .write.mode(SaveMode.Overwrite).format("parquet")
       .option("path", path.getPath)
@@ -218,10 +219,5 @@ object MergeStore {
     }
     base.as("b").join(delta.as("d"), cond, "full_outer")
       .select(keyOut ++ valOut: _*)
-  }
-
-  private def rm(f: java.io.File): Unit = if (f.exists) {
-    if (f.isDirectory) f.listFiles().foreach(rm)
-    f.delete()
   }
 }

@@ -75,12 +75,8 @@ object StreamingCrawl {
             s"but this config is ($stampVal) — use a fresh workDir")
     } else {
       val tmp = new java.io.File(candidatesPath(cfg) + ".tmp")
-      if (tmp.exists) { // crashed materialization — rebuild
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-        }
-        rm(tmp)
-      }
+      // leftovers of a crashed materialization: rebuild from scratch
+      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
       Crawl.candidateUnits(spark, cfg).write
         .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
       java.nio.file.Files.write(new java.io.File(tmp, "_cfg").toPath,

@@ -162,7 +162,7 @@ class OpsSpec extends AnyFunSuite {
 
     val got = DedupOps.winnowPairs(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // candidates (>=2 shared prints, df-capped) + exact Jaccard verify
+    // candidates (>=1 shared df-capped print) + exact Jaccard verify
     // must equal brute force at the threshold — the driver's hard row
     assert(got == truePairs,
       s"missed: ${truePairs -- got}; extra: ${got -- truePairs}")
@@ -179,17 +179,19 @@ class OpsSpec extends AnyFunSuite {
     } ++ Seq(
       (100L, "the quick brown fox jumps over the lazy dog again and again today"),
       (101L, "the quick brown fox jumps over the lazy dog again and again tonight"))
-    val dir = java.nio.file.Files.createTempDirectory("winnow-cap").toString
-    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    // the cap is genuinely exercised: the boilerplate prints have df=50
-    val dfByFp = docs.flatMap { case (id, tx) =>
-      Sigs.winnow(tx, 24, 16).map(fp => (fp, id)) }
-      .groupBy(_._1).map { case (_, xs) => xs.map(_._2).distinct.size }
-    assert(dfByFp.exists(_ >= 50), "fixture must contain df-50 boilerplate prints")
-    val got = DedupOps.winnowPairs(spark, dir, maxDf = 8).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((100L, 101L)),
-      s"expected only the true near-dup pair, got $got")
+    val dir = java.nio.file.Files.createTempDirectory("winnow-cap").toFile
+    try {
+      docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      // the cap is genuinely exercised: the boilerplate prints have df=50
+      val dfByFp = docs.flatMap { case (id, tx) =>
+        Sigs.winnow(tx, 24, 16).map(fp => (fp, id)) }
+        .groupBy(_._1).map { case (_, xs) => xs.map(_._2).distinct.size }
+      assert(dfByFp.exists(_ >= 50), "fixture must contain df-50 boilerplate prints")
+      val got = DedupOps.winnowPairs(spark, dir.toString, maxDf = 8).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == Set((100L, 101L)),
+        s"expected only the true near-dup pair, got $got")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
   test("ngram blocking-key df cap prunes boilerplate prefixes") {
@@ -206,17 +208,19 @@ class OpsSpec extends AnyFunSuite {
     } ++ Seq(
       (100L, "shared prefix pair x the quick brown fox jumps over the lazy dog again today"),
       (101L, "shared prefix pair x the quick brown fox jumps over the lazy dog again tonight"))
-    val dir = java.nio.file.Files.createTempDirectory("ngram-cap").toString
-    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    val got = DedupOps.ngramJaccard(spark, dir, threshold = 0.5, maxDf = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((100L, 101L)),
-      s"expected only the small-block near-dup pair, got $got")
-    // sanity that the cap is what prevented the blowup: uncapped, the
-    // boilerplate block really does emit its quadratic candidate set
-    val uncapped = DedupOps.ngramJaccard(spark, dir, threshold = 0.0,
-      maxDf = 1000).count()
-    assert(uncapped >= 50L * 49 / 2)
+    val dir = java.nio.file.Files.createTempDirectory("ngram-cap").toFile
+    try {
+      docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val got = DedupOps.ngramJaccard(spark, dir.toString, threshold = 0.5, maxDf = 8)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == Set((100L, 101L)),
+        s"expected only the small-block near-dup pair, got $got")
+      // sanity that the cap is what prevented the blowup: uncapped, the
+      // boilerplate block really does emit its quadratic candidate set
+      val uncapped = DedupOps.ngramJaccard(spark, dir.toString, threshold = 0.0,
+        maxDf = 1000).count()
+      assert(uncapped >= 50L * 49 / 2)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
   test("pair operators release their signature caches (no persist leak)") {
@@ -226,6 +230,8 @@ class OpsSpec extends AnyFunSuite {
     // accumulates for the session lifetime
     val before = spark.sparkContext.getPersistentRDDs.keySet
     DedupOps.minhashPairs(spark, sf0001).count()
+    DedupOps.simhashDedup(spark, sf0001).count()
+    DedupOps.ngramJaccard(spark, sf0001).count()
     DedupOps.winnowPairs(spark, sf0001).count()
     DedupOps.embeddingNearDup(spark, sf0001).count()
     val after = spark.sparkContext.getPersistentRDDs.keySet

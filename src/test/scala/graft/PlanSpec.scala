@@ -49,23 +49,30 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("minhash verify joins reuse the persisted signature table") {
-    // the shingle+signature pass is computed once and cached; banding and
-    // both verify sides read the InMemoryRelation, not the raw scan.
-    // Asserted on the PRE-detach plan: the public result is deliberately
-    // a detached local relation (caches released — see the OpsSpec
-    // no-persist-leak test), so the join plan is inspected via the
-    // package-private hook.
-    val (caches, planned) = graft.ops.DedupOps.minhashPairsPlanned(
-      SparkTestSession.spark, SparkTestSession.sf0001, 16, 4, 0.8)
-    try {
-      val p = planned.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
-        s"signature table must be persisted:\n$p")
-    } finally caches.foreach(_.unpersist())
-    // and the public result IS detached: a local relation with no lineage
-    val pub = plan("q_minhash_dedup")
-    assert(pub.contains("LocalTableScan"), s"expected detached result:\n$pub")
+    // every near-dup operator computes its per-doc kernel once and caches
+    // it; the key self-join and the verify sides read the
+    // InMemoryRelation, not the raw scan. Asserted on the PRE-detach plan:
+    // the public result is deliberately a detached local relation (caches
+    // released — see the OpsSpec no-persist-leak test), so the join plan
+    // is inspected via the package-private `xPlan` hooks.
+    import graft.ops.DedupOps._
+    val hooks = Seq(
+      "q_minhash_dedup" -> (() => minhashPairsPlan(spark, sf0001)),
+      "q_simhash_dedup" -> (() => simhashDedupPlan(spark, sf0001)),
+      "q_ngram_jaccard" -> (() => ngramJaccardPlan(spark, sf0001, 0.5, 32)),
+      "q_winnow_dedup" -> (() => winnowPairsPlan(spark, sf0001, 32)),
+      "q_embedding_neardup" -> (() => embeddingNearDupPlan(spark, sf0001)))
+    for ((name, hook) <- hooks) {
+      val pairs = hook()
+      try {
+        val p = pairs.plan.queryExecution.explainString(FormattedMode)
+        assert(p.contains("InMemoryRelation"),
+          s"$name: kernel table must be persisted:\n$p")
+      } finally pairs.caches.foreach(_.unpersist())
+      // and the public result IS detached: a local relation, no lineage
+      val pub = plan(name)
+      assert(pub.contains("LocalTableScan"), s"$name: expected detached result:\n$pub")
+    }
   }
 
   test("precedence dedup is a partial-aggregated min, not a window") {
