@@ -1,5 +1,7 @@
 package graft.crawl
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -97,6 +99,13 @@ object Crawl {
     * materialized on the driver. */
   def candidateUnits(spark: SparkSession, cfg: CrawlConfig): Dataset[CrawlUnit] = {
     import spark.implicits._
+    // the sortKey below pads familyRank/langRank to 2 chars with lpad, which
+    // TRUNCATES a 3-digit rank where sortKey()'s %02d widens it — the two
+    // keys (and the oracle's order) would silently diverge. Ranks are list
+    // indices, so both lists must stay within 100 entries (ranks < 100).
+    require(World.families.size <= 100 && World.langs.size <= 100,
+      s"sortKey pads ranks to 2 digits, but World has ${World.families.size} " +
+        s"families and ${World.langs.size} langs (each must be ≤ 100)")
 
     // S1 frontier scan (synthetic source), P1 Qid-validity filter pushed
     // to the generator scan. URL variants and family duplicates need no
@@ -212,6 +221,44 @@ object Crawl {
       .as[CrawlUnit]
   }
 
+  /** The persisted global candidate set of a crawl state dir. */
+  def candidatesPath(cfg: CrawlConfig): String = s"${cfg.workDir}/candidates"
+
+  /** [[candidateUnits]] as a scan of its persisted table, written first if
+    * missing. The set is a pure function of (seed, nEntities), so it is
+    * synthesized at most once per crawl state dir and committed columnar
+    * (tmp dir, then atomic rename). Every reader after that — later batch
+    * ticks, streaming micro-batches, the writeback seed generation — gets a
+    * parquet scan instead of a recompute of the frontier dedup, sitelink
+    * join, robots join and URL-dedup aggregate, which at 10^10 entities
+    * would re-shuffle the full world each time. */
+  def storedCandidates(spark: SparkSession, cfg: CrawlConfig): Dataset[CrawlUnit] = {
+    import spark.implicits._
+    val dir = Paths.get(candidatesPath(cfg))
+    // stamped with (seed, nEntities) so reusing a workDir with a CHANGED
+    // config fails fast instead of silently serving the stale set (the rest
+    // of the workDir state — seen sets, manifests — is config-bound the same
+    // way, so a silent rebuild would still mix worlds; failing is the safe
+    // move)
+    val stampVal = s"${cfg.seed},${cfg.nEntities}"
+    val stamp = dir.resolve("_cfg") // `_`-prefixed: parquet-invisible
+    if (Files.exists(dir)) {
+      val found = if (Files.exists(stamp)) Files.readString(stamp) else "<missing>"
+      if (found != stampVal)
+        throw new IllegalStateException(
+          s"candidate set at $dir was built for (seed,nEntities)=($found), " +
+            s"but this config is ($stampVal) — use a fresh workDir")
+    } else {
+      val tmp = Paths.get(candidatesPath(cfg) + ".tmp")
+      // leftovers of a crashed materialization: rebuild from scratch
+      FileUtils.deleteQuietly(tmp.toFile)
+      candidateUnits(spark, cfg).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      Files.writeString(tmp.resolve("_cfg"), stampVal)
+      Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+    }
+    spark.read.parquet(dir.toString).as[CrawlUnit]
+  }
+
   /** Robots rules dimension: (host, first-letter) → allowed (FIXTURES.md F4). */
   def robotsDim(spark: SparkSession, seed: Long): DataFrame = {
     import spark.implicits._
@@ -294,8 +341,9 @@ object Crawl {
     * re-running a tick overwrites the same tick directories byte-equal. */
   def tick(spark: SparkSession, cfg: CrawlConfig, tickIdx: Int,
            candidatesOpt: Option[Dataset[CrawlUnit]] = None): TickResult = {
-    // candidates may be cached by run() — regenerating them per tick is
-    // deterministic but wasteful (the frontier scan + dedup windows)
+    // run() passes tick 0 the lazy synthesis plan and every later tick the
+    // scan of the persisted table (storedCandidates); a standalone call
+    // synthesizes
     val candidates = candidatesOpt.getOrElse(candidateUnits(spark, cfg))
     val fresh = filterNew(spark, candidates, cfg)
     scheduleAndPersist(spark, cfg, tickIdx, fresh)
@@ -453,12 +501,13 @@ object Crawl {
          |    $watermarks
          |  }
          |}""".stripMargin
-    val mdir = new java.io.File(s"${cfg.workDir}/manifests")
-    mdir.mkdirs()
-    // atomic rename (M7: checkpoint advances only after the batch persists)
-    val tmp = new java.io.File(mdir, s".manifest_$tickIdx.tmp")
-    java.nio.file.Files.writeString(tmp.toPath, manifest)
-    tmp.renameTo(new java.io.File(mdir, s"manifest_$tickIdx.json"))
+    val mdir = Files.createDirectories(Paths.get(s"${cfg.workDir}/manifests"))
+    // atomic rename (M7: checkpoint advances only after the batch persists);
+    // Files.move throws, so a failed commit cannot pass for a committed tick
+    val tmp = mdir.resolve(s".manifest_$tickIdx.tmp")
+    Files.writeString(tmp, manifest)
+    Files.move(tmp, mdir.resolve(s"manifest_$tickIdx.json"),
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
 
     val res = TickResult(tickIdx, scheduledCount, okCount, docCount,
       spanCount, done = false)
@@ -521,26 +570,26 @@ object Crawl {
     import spark.implicits._
     cleanPartialTicks(cfg.workDir) // drop half-persisted state before resume
     val start = completedTicks(cfg.workDir)
-    // the candidate total (needed only for the frontier-exhaustion check)
-    // rides the FIRST tick's fetch+parse+write job via observe(): a
-    // separate count action would serialize a full candidate
-    // synthesis+shuffle pass BEFORE any fetch work starts (measured 6.4 s
-    // of the 39 s 8-core bench run — pure Amdahl loss); observed inside
-    // the job, the synthesis pipelines with the parse work instead
-    // NOT cached: a memory-store fill of the full candidate set inside the
-    // fetch job competes with the parse's allocation for the heap (measured
-    // +16 s on the 8-core 500k run when the cache materialized mid-job);
-    // re-synthesis per tick is a few seconds of fully-parallel work, paid
-    // only by multi-tick runs (whose worlds are small — the bench world
-    // exhausts in one tick; the streaming driver persists candidates to
-    // parquet instead, see StreamingCrawl.ensureCandidates)
+    // Tick 0 runs on the lazy, unmaterialized synthesis plan, with the
+    // candidate total (needed only for the frontier-exhaustion check)
+    // observed inside its fetch+parse+write job: writing the table (or a
+    // separate count) first would serialize a full candidate synthesis
+    // BEFORE any fetch work starts (measured 6.4 s of the 39 s 8-core bench
+    // run — pure Amdahl loss), and a crawl that finishes in one tick never
+    // reads the candidates again. NOT cached either: a memory-store fill of
+    // the full candidate set inside the fetch job competes with the parse's
+    // allocation for the heap (measured +16 s on the 8-core 500k run).
+    // Only when tick 0 leaves the crawl unfinished, with another tick
+    // allowed, is the table written (storedCandidates) — once per state dir
+    // — and every later tick scans it instead of re-synthesizing. A resumed
+    // run reads (or, after a crash before it landed, writes) the table up
+    // front, and its exhaustion check counts that scan.
     val obsCand = new org.apache.spark.sql.Observation("candidates_total")
-    val candidates = candidateUnits(spark, cfg)
-      .observe(obsCand, count(lit(1)).as("total"))
-    // resume path (rare): the exhaustion check is needed BEFORE the next
-    // tick runs, so it pays the explicit count
-    var total = if (start == 0) -1L
-                else candidates.count()
+    var candidates =
+      if (start == 0)
+        candidateUnits(spark, cfg).observe(obsCand, count(lit(1)).as("total"))
+      else storedCandidates(spark, cfg)
+    var total = if (start == 0) -1L else candidates.count()
     var crawled =
       if (start == 0) 0L
       else readSeen(spark, cfg.workDir).count()
@@ -556,6 +605,10 @@ object Crawl {
       // frontier exhausted — skip scheduling an empty confirmation tick
       if (crawled >= total) done = true
       i += 1
+      // i == 1 only right after tick 0 of a fresh run, the one tick that ran
+      // on the synthesis plan
+      if (i == 1 && !done && i < cfg.maxTicks)
+        candidates = storedCandidates(spark, cfg)
     }
     out.result()
   }

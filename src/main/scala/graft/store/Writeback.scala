@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ColSyntax._
+import graft.crawl.Crawl
 import graft.crawl.Crawl.CrawlConfig
 import graft.synth.World
 
@@ -36,13 +37,11 @@ object Writeback {
   def writeDims(spark: SparkSession, cfg: CrawlConfig, dimsDir: String): Unit = {
     // gen 0: the pre-crawl dimension — every candidate entity of an image
     // family, destination columns NULL. Seeded from the PERSISTED
-    // candidate set (materialized once per workDir, the
-    // StreamingCrawl.ensureCandidates pattern) instead of re-running the
-    // full frontier synthesis + dedup windows: at 10^10 entities the seed
+    // candidate set (Crawl.storedCandidates: materialized once per workDir,
+    // usually already by the crawl itself) instead of re-running the full
+    // frontier synthesis + dedup windows: at 10^10 entities the seed
     // generation is a pruned columnar scan, not a second frontier shuffle.
-    graft.streaming.StreamingCrawl.ensureCandidates(spark, cfg)
-    val seedGen = spark.read
-      .parquet(graft.streaming.StreamingCrawl.candidatesPath(cfg))
+    val seedGen = Crawl.storedCandidates(spark, cfg)
       .filter($"family".isin(imageFamilies: _*))
       .select($"family", $"qid").distinct()
       .withColumn("image_url", lit(null).cast("string"))

@@ -13,7 +13,8 @@ import graft.crawl.Crawl.CrawlConfig
   * engine — range-restricted candidates → URL-seen dedup against the
   * persistent seen state → politeness selection → fetch+parse →
   * pages/seen/Bloom/manifest persistence via `foreachBatch`. State is the
-  * batch engine's own, so a crawl moves freely between batch and
+  * batch engine's own, the persisted candidate table included (owned by
+  * [[Crawl.storedCandidates]]), so a crawl moves freely between batch and
   * streaming drivers: the micro-batch loop IS the reference's resumable
   * family loop (wikipedia_crawler.py:776-860), event-driven, with
   * exactly-once effects from idempotent keyed writes + the streaming
@@ -47,45 +48,6 @@ object StreamingCrawl {
       .start()
   }
 
-  /** The persisted global candidate set: a pure function of
-    * (seed, nEntities), so it is computed ONCE per crawl state dir and
-    * committed columnar (atomic rename). Every micro-batch after that is a
-    * pruned parquet scan + broadcast semi-join — NOT a recompute of the
-    * frontier dedup windows, which at 10^10 entities would re-shuffle the
-    * full world on every micro-batch. */
-  private[graft] def candidatesPath(cfg: CrawlConfig) = s"${cfg.workDir}/candidates"
-
-  private[graft] def ensureCandidates(spark: SparkSession,
-                                      cfg: CrawlConfig): Unit = {
-    val dir = new java.io.File(candidatesPath(cfg))
-    // the candidate set is a pure function of (seed, nEntities) — stamp it
-    // so reusing a workDir with a CHANGED config fails fast instead of
-    // silently serving the stale set to every micro-batch (the rest of the
-    // workDir state — seen sets, manifests — is config-bound the same way,
-    // so a silent rebuild would still mix worlds; failing is the safe move)
-    val stampVal = s"${cfg.seed},${cfg.nEntities}"
-    val stamp = new java.io.File(dir, "_cfg") // `_`-prefixed: parquet-invisible
-    if (dir.exists) {
-      val found = if (stamp.exists)
-        new String(java.nio.file.Files.readAllBytes(stamp.toPath), "UTF-8")
-      else "<missing>"
-      if (found != stampVal)
-        throw new IllegalStateException(
-          s"candidate set at $dir was built for (seed,nEntities)=($found), " +
-            s"but this config is ($stampVal) — use a fresh workDir")
-    } else {
-      val tmp = new java.io.File(candidatesPath(cfg) + ".tmp")
-      // leftovers of a crashed materialization: rebuild from scratch
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-      Crawl.candidateUnits(spark, cfg).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
-      java.nio.file.Files.write(new java.io.File(tmp, "_cfg").toPath,
-        stampVal.getBytes("UTF-8"))
-      if (!tmp.renameTo(dir))
-        throw new java.io.IOException(s"cannot commit candidate set at $dir")
-    }
-  }
-
   /** One micro-batch: schedule + persist the announced entity ranges. */
   private[graft] def runMicroBatch(spark: SparkSession, cfg: CrawlConfig,
                                    batch: DataFrame, batchId: Long): Unit = {
@@ -102,8 +64,8 @@ object StreamingCrawl {
     // restricted to the announced entity ranges via a broadcast semi-join
     // on qid — so streaming arrival order can never crawl a unit the batch
     // engine would have deduped away. The candidate set itself is persisted
-    // once (see ensureCandidates), not recomputed per micro-batch.
-    ensureCandidates(spark, cfg)
+    // once per state dir (Crawl.storedCandidates), not recomputed per
+    // micro-batch.
     val announcedQids = ranges
       .map { case (a, b) =>
         spark.range(a, b).flatMap(i =>
@@ -112,7 +74,7 @@ object StreamingCrawl {
       .reduce(_ unionByName _)
       .distinct()
       .toDF("qid")
-    val candidates = spark.read.parquet(candidatesPath(cfg))
+    val candidates = Crawl.storedCandidates(spark, cfg)
       .join(org.apache.spark.sql.functions.broadcast(announcedQids),
         Seq("qid"), "left_semi")
       .as[Crawl.CrawlUnit]

@@ -115,6 +115,74 @@ class CrawlEqualitySpec extends AnyFunSuite {
     docs.foreach { case (id, spans) => assert(spans == oracle.docs(id)) }
   }
 
+  // ---- the persisted candidate table (Crawl.storedCandidates) -------------
+
+  private def candidateEntries(workDir: String): Seq[String] =
+    new java.io.File(workDir).list().toSeq.filter(_.startsWith("candidates")).sorted
+
+  private def crawledBatches(workDir: String, ticks: Seq[Crawl.TickResult]) =
+    ticks.map { t =>
+      t.tick -> spark.read.parquet(s"$workDir/pages/tick=${t.tick}")
+        .select($"doc_id", $"sortKey").collect()
+        .map(x => (x.getString(0), x.getString(1))).sortBy(_._2).map(_._1).toVector
+    }
+
+  test("a crawl that finishes in one tick writes no candidate table") {
+    val cfg = cfg0.copy(budgetPerHost = 1000, workDir = freshDir())
+    assert(Crawl.run(spark, cfg).length == 1)
+    assert(candidateEntries(cfg.workDir).isEmpty)
+  }
+
+  test("a multi-tick crawl leaves exactly one stamped candidate table") {
+    val cfg = cfg0.copy(maxTicks = 2, workDir = freshDir())
+    val results = Crawl.run(spark, cfg)
+    assert(results.map(_.tick) == Seq(0, 1))
+    crawledBatches(cfg.workDir, results).foreach { case (t, batch) =>
+      assert(batch == oracle.batches(t).map(_.docId), s"batch mismatch at tick $t")
+    }
+    assert(candidateEntries(cfg.workDir) == Seq("candidates"))
+    val stamp = Files.readString(
+      java.nio.file.Paths.get(Crawl.candidatesPath(cfg), "_cfg"))
+    assert(stamp == s"${cfg.seed},${cfg.nEntities}")
+    val stored = spark.read.parquet(Crawl.candidatesPath(cfg)).as[Crawl.CrawlUnit]
+    assert(stored.exceptAll(Crawl.candidateUnits(spark, cfg)).isEmpty)
+    assert(Crawl.candidateUnits(spark, cfg).exceptAll(stored).isEmpty)
+  }
+
+  test("a crash mid-materialization rebuilds the table and resumes exactly") {
+    val cfg = cfg0.copy(workDir = freshDir())
+    Crawl.tick(spark, cfg, 0)
+    // the crash window: tick 0 committed, the table's tmp dir half-written
+    val tmp = new java.io.File(Crawl.candidatesPath(cfg) + ".tmp")
+    assert(tmp.mkdirs())
+    Files.writeString(tmp.toPath.resolve("part-00000.parquet"), "truncated")
+    Files.writeString(tmp.toPath.resolve("_cfg"), "0,0")
+    val resumed = Crawl.run(spark, cfg)
+    assert(resumed.head.tick == 1)
+    assert(resumed.length + 1 == oracle.batches.length)
+    assert(candidateEntries(cfg.workDir) == Seq("candidates"))
+    crawledBatches(cfg.workDir, resumed).foreach { case (t, batch) =>
+      assert(batch == oracle.batches(t).map(_.docId), s"batch mismatch at tick $t")
+    }
+    val seen = spark.read.parquet(Crawl.seenDir(cfg.workDir))
+      .select($"url").collect().map(_.getString(0)).toSet
+    assert(seen == oracle.seen)
+    val docs = Crawl.docsView(spark, cfg.workDir).collect()
+      .map(d => d.doc_id -> d.spans).toMap
+    assert(docs.keySet == oracle.docs.keySet)
+    docs.foreach { case (id, spans) => assert(spans == oracle.docs(id)) }
+  }
+
+  test("resuming a state dir with a different world fails fast") {
+    val cfg = cfg0.copy(maxTicks = 2, workDir = freshDir())
+    Crawl.run(spark, cfg)
+    val err = intercept[IllegalStateException] {
+      Crawl.run(spark, cfg.copy(nEntities = cfg.nEntities + 1, maxTicks = cfg0.maxTicks))
+    }
+    assert(err.getMessage.contains("use a fresh workDir"), err.getMessage)
+    assert(Crawl.completedTicks(cfg.workDir) == 2)
+  }
+
   test("politeness budget is respected per host per tick") {
     val cfg = cfg0.copy(workDir = freshDir())
     Crawl.tick(spark, cfg, 0)

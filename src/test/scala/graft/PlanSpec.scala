@@ -187,4 +187,32 @@ class PlanSpec extends AnyFunSuite {
     assert(hostSaltExchanges == 1,
       s"expected ONE (host, salt) exchange shared by both windows, got $hostSaltExchanges:\n$p")
   }
+
+  test("ticks after the first schedule from the stored candidate table") {
+    import graft.crawl.Crawl
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-cands").toFile
+    val cfg = Crawl.CrawlConfig(seed = 42L, nEntities = 200L,
+      budgetPerHost = 16, saltBuckets = 4, maxTicks = 2, workDir = dir.getPath)
+    // the synthesis plan is what a later tick must no longer contain
+    assert(crawlBatchPlan.contains("MapPartitions"), crawlBatchPlan)
+    val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    try {
+      // two ticks: the table is written after tick 0, and tick 1 leaves seen
+      // state behind, so filterNew plans its Bloom probe + anti-join
+      assert(Crawl.run(spark, cfg).length == 2)
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val stored = Crawl.storedCandidates(spark, cfg)
+      val p = Crawl.selectBatch(Crawl.filterNew(spark, stored, cfg),
+        cfg.budgetPerHost, cfg.saltBuckets)
+        .queryExecution.explainString(FormattedMode)
+      assert(p.contains("Scan parquet") && p.contains("/candidates]"), p)
+      assert(p.contains("LeftAnti"), p)
+      assert(!p.contains("SortMergeJoin"), p)
+      assert(!p.contains("Generate") && !p.contains("MapPartitions"),
+        s"the world generator must not run again:\n$p")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", before)
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    }
+  }
 }
